@@ -248,10 +248,12 @@ def run(spark: SparkSession, job: ReplicaJob) -> ReplicaResult:
     obs = Observation("replicadb_rows")
     df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
     write_sink(spark, job, df)
-    try:
-        rows = int(obs.get["rows"])
-    except Exception:
-        rows = -1  # sink path didn't run a Spark action (e.g. pure-SQL merge)
+    # Every sink path runs at least one action over ``df`` (JDBC merges
+    # load their staging table first), and the first one fills the
+    # observation — an empty source included (count 0). ``get`` raises
+    # only when the optimizer dropped the observed plan from the action,
+    # which no sink path does: a bug to surface, never a row count.
+    rows = int(obs.get["rows"])
     src_kind, _ = registry.classify(job.source_connect)
     sink_kind, _ = registry.classify(job.sink_connect)
     return ReplicaResult(rows=rows, source_kind=src_kind, sink_kind=sink_kind, mode=job.mode)

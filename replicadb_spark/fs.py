@@ -39,6 +39,8 @@ Design notes (mirrors Delta's LogStore contract):
   manifest stores these strings, Spark reads them back, and set
   operations (victim pruning, GC set-difference) compare equal — no
   ``file:/`` vs ``/`` representation drift.
+- **One swap for directory rewrites.** :meth:`TableFS.replace` is
+  the crash-safe temp-and-swap every file merge and compaction takes.
 - **Executor-side data access stays in pyarrow** (``pyarrow_open`` /
   ``pyarrow_fs_for``): footer reads, stat calls and GC deletes run
   distributed inside Arrow tasks where the JVM gateway does not exist.
@@ -189,6 +191,53 @@ class TableFS:
 
     def delete(self, p: str, recursive: bool = False) -> bool:
         return bool(self._fs.delete(self._jpath(p), recursive))
+
+    # -- the directory swap ----------------------------------------------
+    def _recover_swap(self, tmp: str, old: str) -> None:
+        """Finish or undo a swap a crash interrupted. Only a crash
+        between the two renames of :meth:`replace` leaves the root
+        missing: the prior version is in ``old`` and the new one in
+        ``tmp``, complete iff its job committed ``_SUCCESS``. Roll
+        forward from a committed ``tmp``, else back from ``old``. With
+        the root present, both siblings are leftovers and go."""
+        if not self.exists(self.root) and self.exists(old):
+            if self.exists(join(tmp, "_SUCCESS")):
+                self.rename_no_overwrite(tmp, self.root)
+            else:
+                self.rename_no_overwrite(old, self.root)
+        self.delete(old, recursive=True)
+        self.delete(tmp, recursive=True)
+
+    def replace(self, build, write=None) -> bool:
+        """Crash-safe rewrite of the directory at the table root.
+
+        ``build()`` runs after any interrupted swap is recovered, so it
+        reads the full prior version; it returns the next version, or
+        None to leave the table alone (then ``replace`` returns False).
+        ``write(frame, tmp)`` (default: parquet overwrite) lands it at
+        ``<root>.__replicadb_tmp__`` — never over the files ``frame``
+        reads, so no lineage cut is needed. Then rename-aside: root →
+        ``<root>.__replicadb_old__``, tmp → root, delete old. Every
+        crash point leaves a complete copy that the next ``replace``
+        recovers. On object stores rename is copy+delete: slower, still
+        after the tmp write completed."""
+        tmp = self.root + ".__replicadb_tmp__"
+        old = self.root + ".__replicadb_old__"
+        self._recover_swap(tmp, old)
+        frame = build()
+        if frame is None:
+            return False
+        if write is None:
+            frame.write.mode("overwrite").parquet(tmp)
+        else:
+            write(frame, tmp)
+        had_root = self.exists(self.root)
+        if had_root:
+            self.rename_no_overwrite(self.root, old)
+        self.rename_no_overwrite(tmp, self.root)
+        if had_root:
+            self.delete(old, recursive=True)
+        return True
 
     # -- the commit primitive --------------------------------------------
     _S3_SCHEMES = ("s3a", "s3n", "s3")

@@ -22,11 +22,32 @@ from replicadb_spark.options import ReplicaJob
 from replicadb_spark.sql import dialects
 
 
+def _plan_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate of ``df``: the listed bytes on disk for a
+    file scan, ``spark.sql.defaultSizeInBytes`` for sources without stats
+    (JDBC). Planning only — runs no Spark job."""
+    stats = df._jdf.queryExecution().optimizedPlan().stats()
+    return int(stats.sizeInBytes())
+
+
+def _fits_width(sink: DataFrame, staging: DataFrame, partitions: int) -> bool:
+    """The size gate of the ``partitions``-wide merge: sink plus staging
+    at most ``partitions`` × AQE's advisory partition size. Below it AQE
+    would coalesce the PK shuffle to fewer than ``partitions`` tasks;
+    above it AQE's own sizing already runs at least that many."""
+    spark = sink.sparkSession
+    advisory = spark._jsparkSession.sessionState().conf().getConf(  # noqa: SLF001
+        spark._jvm.org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES()  # noqa: SLF001
+    )
+    return _plan_bytes(sink) + _plan_bytes(staging) <= partitions * int(advisory)
+
+
 def upsert_dataframe(
     sink: DataFrame,
     staging: DataFrame,
     pk_columns: list[str],
     order_column: str | None = None,
+    partitions: int | None = None,
 ) -> DataFrame:
     """The relational core of M3a-M3f: staging rows replace sink rows on
     PK match, new staging rows insert, unmatched sink rows survive.
@@ -38,6 +59,13 @@ def upsert_dataframe(
     micro-batch with multiple updates for a key). At 100 TB the shuffle
     is on the PK, which is as partition-friendly as an upsert can be;
     AQE handles skew.
+
+    ``partitions`` (the job's ``jobs``) makes that one shuffle an
+    explicit hash repartition on the PK, which the window reuses, so the
+    merge and its write run ``partitions`` tasks — AQE would otherwise
+    coalesce a small merge to a single task. Size-gated by
+    :func:`_fits_width`; above the gate, and with the default None, the
+    plan is the AQE-sized one.
     """
     if not pk_columns:
         raise ValueError("upsert requires pk columns")
@@ -45,6 +73,8 @@ def upsert_dataframe(
     tagged = sink.select(*cols).withColumn("__pri", F.lit(0)).unionByName(
         staging.select(*cols).withColumn("__pri", F.lit(1))
     )
+    if partitions and _fits_width(sink, staging, partitions):
+        tagged = tagged.repartition(partitions, *pk_columns)
     order = [F.col("__pri").desc()]
     if order_column:
         order.append(F.col(order_column).desc())
@@ -224,27 +254,17 @@ def run_jdbc_mode(spark: SparkSession, job: ReplicaJob, df: DataFrame) -> None:
             run([dialects.drop_staging_sql(staging)])
 
 
-def run_file_mode(spark: SparkSession, job: ReplicaJob, df: DataFrame, *,
-                  path: str, fmt: str, pk_columns: list[str] | None = None,
-                  **write_opts) -> None:
-    """File-sink modes. complete/complete-atomic = overwrite (Spark's
-    job-commit protocol already gives all-or-nothing visibility, which is
-    strictly stronger than the reference's temp-file merge K11/K12);
-    incremental = read-existing → upsert → rewrite.
-    """
-    from replicadb_spark.sinks.files import write_file
-
-    if job.mode in ("complete", "complete-atomic"):
-        write_file(df, path, fmt, mode="overwrite", **write_opts)
-        return
-    # incremental
+def _read_sink(spark: SparkSession, path: str, fmt: str) -> "DataFrame | None":
+    """The existing file sink, or None when there is none to merge into:
+    a genuinely absent path (first run), or CSV (no reader-side merge).
+    An unreadable/corrupt sink must FAIL the job: falling back to append
+    would silently skip the PK merge and land duplicate keys (same
+    contract as the streaming state readers)."""
+    if fmt == "csv":
+        return None
     try:
-        existing = spark.read.format(fmt).load(path) if fmt != "csv" else None
+        return spark.read.format(fmt).load(path)
     except Exception as e:
-        # only a genuinely absent sink means "first run" (→ plain
-        # append). An unreadable/corrupt sink must FAIL the job: falling
-        # back to append would silently skip the PK merge and land
-        # duplicate keys (same contract as the streaming state readers).
         from pyspark.errors import AnalysisException
 
         cls = e.getErrorClass() if isinstance(e, AnalysisException) and hasattr(
@@ -252,39 +272,42 @@ def run_file_mode(spark: SparkSession, job: ReplicaJob, df: DataFrame, *,
         ) else None
         if cls != "PATH_NOT_FOUND" and "Path does not exist" not in str(e):
             raise
-        existing = None
-    if existing is None:
-        write_file(df, path, fmt, mode="append", **write_opts)
+        return None
+
+
+def run_file_mode(spark: SparkSession, job: ReplicaJob, df: DataFrame, *,
+                  path: str, fmt: str, pk_columns: list[str] | None = None,
+                  **write_opts) -> None:
+    """File-sink modes. complete/complete-atomic = overwrite (Spark's
+    job-commit protocol already gives all-or-nothing visibility, which is
+    strictly stronger than the reference's temp-file merge K11/K12);
+    incremental = read-existing → upsert → rewrite, at ``job.jobs``
+    width while the data fits (``upsert_dataframe``'s size gate).
+
+    The merge goes through ``TableFS.replace``: the merged plan READS
+    ``path``, so it is written to a sibling temp path and swapped in by
+    rename-aside — never overwritten in place, where a recompute could
+    read the half-overwritten input. A crash at any point leaves one
+    complete copy on disk, and the next incremental run on ``path``
+    recovers it before reading, so that run merges over the full prior
+    data. First runs, CSV sinks and PK-less jobs append.
+    """
+    from replicadb_spark.fs import TableFS
+    from replicadb_spark.sinks.files import write_file
+    from replicadb_spark.sinks.s3 import rewrite_s3_url
+
+    if job.mode in ("complete", "complete-atomic"):
+        write_file(df, path, fmt, mode="overwrite", **write_opts)
         return
-    if not pk_columns:
+
+    def merged() -> "DataFrame | None":
+        existing = _read_sink(spark, path, fmt)
+        if existing is None or not pk_columns:
+            return None
+        return upsert_dataframe(existing, df, pk_columns, partitions=job.jobs)
+
+    if not TableFS(spark, rewrite_s3_url(path)).replace(
+        merged,
+        lambda frame, tmp: write_file(frame, tmp, fmt, mode="overwrite", **write_opts),
+    ):
         write_file(df, path, fmt, mode="append", **write_opts)
-        return
-    # Crash-safe merge: the merged plan READS `path`, so writing back to
-    # `path` directly races the overwrite against lazy/recomputed reads
-    # (cache eviction mid-write would recompute from the half-overwritten
-    # input → data loss). Instead the merge is fully materialized at a
-    # sibling temp path first, then swapped in via rename-aside (the
-    # same dance as sinks.files.compact_files): (1) path → .old (both
-    # copies intact), (2) tmp → path (new data live), (3) delete .old.
-    # A crash at ANY point leaves at least one complete copy on disk
-    # under a discoverable name — never a half-deleted table. Hadoop
-    # FileSystem rename is atomic on HDFS/local; on object stores (s3a)
-    # it degrades to copy+delete, which still never corrupts the source
-    # because the temp write completed before the original is touched.
-    merged = upsert_dataframe(existing, df, pk_columns)
-    tmp = path.rstrip("/") + ".__replicadb_tmp__"
-    write_file(merged, tmp, fmt, mode="overwrite", **write_opts)
-    jvm = spark._sc._jvm  # noqa: SLF001
-    dst = jvm.org.apache.hadoop.fs.Path(path)
-    src = jvm.org.apache.hadoop.fs.Path(tmp)
-    old = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + ".__replicadb_old__")
-    fs = dst.getFileSystem(spark._sc._jsc.hadoopConfiguration())  # noqa: SLF001
-    fs.delete(old, True)  # stale leftover from a prior crash
-    if not fs.rename(dst, old):
-        raise IOError(f"rename {path} aside failed; merged data is intact at {tmp}")
-    if not fs.rename(src, dst):
-        raise IOError(
-            f"rename {tmp} -> {path} failed; original is intact at {old}, "
-            f"merged data at {tmp}"
-        )
-    fs.delete(old, True)

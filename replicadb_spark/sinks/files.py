@@ -91,42 +91,35 @@ def compact_files(
     The 100 TB operational problem this solves: streaming/incremental
     sinks accrete thousands of KB-scale files per partition, and every
     downstream scan then pays a task per file. Compaction = read (one
-    splittable scan) → repartition to ceil(bytes/target) → atomic swap
-    via a temp directory — the same crash-safe rename dance as
-    modes.run_file_mode's incremental path (never overwrite the
-    directory a live plan reads from).
+    splittable scan) → repartition to ceil(bytes/target) → the
+    crash-safe temp-and-swap of ``TableFS.replace``, the same path
+    every file merge takes (never overwrite the directory a live plan
+    reads from).
     """
     import math
-    import uuid
 
     from replicadb_spark.fs import TableFS, join
 
     fs = TableFS(spark, path)
-    parent, name = _split_dir(path)
-    total_bytes = 0
-    pattern = join(path, "*")
-    for _ in range(4):  # part files, then partition-dir nesting
-        total_bytes += sum(sz for _f, sz in fs.glob(pattern))
-        pattern = pattern[:-1] + "*/*"
-    n_files = max(1, math.ceil(total_bytes / (target_file_mb * 1024 * 1024)))
-    reader = spark.read
-    df = getattr(reader, fmt)(path)
-    tmp = join(parent, f".{name}.compact-{uuid.uuid4().hex[:8]}")
-    writer = df.repartition(n_files).write.mode("overwrite")
-    if compression:
-        writer = writer.option("compression", compression)
-    getattr(writer, fmt)(tmp)
-    # Swap only after the full write committed, via rename-aside so no
-    # crash point loses data: (1) src → src.old (table briefly absent
-    # but both copies intact), (2) tmp → src (table live on new files),
-    # (3) delete src.old. A crash between 1 and 2 leaves both dirs
-    # recoverable; delete-then-rename would instead leave the table
-    # path absent with the data stranded in a hidden tmp dir. All moves
-    # go through the Hadoop FS, so any Spark-readable URI works.
-    old = join(parent, f".{name}.old-{uuid.uuid4().hex[:8]}")
-    fs.rename_no_overwrite(path, old)
-    fs.rename_no_overwrite(tmp, path)
-    fs.delete(old, recursive=True)
+    n_files = 0
+
+    def compacted() -> DataFrame:
+        nonlocal n_files
+        total_bytes = 0
+        pattern = join(path, "*")
+        for _ in range(4):  # part files, then partition-dir nesting
+            total_bytes += sum(sz for _f, sz in fs.glob(pattern))
+            pattern = pattern[:-1] + "*/*"
+        n_files = max(1, math.ceil(total_bytes / (target_file_mb * 1024 * 1024)))
+        return getattr(spark.read, fmt)(path).repartition(n_files)
+
+    def write(df: DataFrame, tmp: str) -> None:
+        writer = df.write.mode("overwrite")
+        if compression:
+            writer = writer.option("compression", compression)
+        getattr(writer, fmt)(tmp)
+
+    fs.replace(compacted, write)
     return n_files
 
 

@@ -135,9 +135,8 @@ def test_compact_files_preserves_rows(spark, tmp_path):
     n_after = sum(1 for f in os.listdir(out) if f.endswith(".parquet"))
     assert n_after == n_target == 1
     assert spark.read.parquet(out).count() == 10_000
-    # rename-aside swap cleans up: no hidden .frag.compact-*/.frag.old-*
-    # siblings left behind
-    assert [d for d in os.listdir(tmp_path) if d.startswith(".frag.")] == []
+    # the temp-and-swap cleans up: no temp or set-aside sibling left
+    assert os.listdir(tmp_path) == ["frag"]
 
 
 def test_engine_partitioned_sink_params(spark, tmp_path):

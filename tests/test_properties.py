@@ -10,7 +10,7 @@ having: the unit suites pin known cases, these pin the CONTRACT.
 
 import math
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from replicadb_spark.sinks import mysql_load as M
 from replicadb_spark.sinks import pg_copy as P
@@ -92,33 +92,45 @@ def test_mysql_load_row_shape(values):
 # upsert_dataframe vs a dict model (the M3 relational core)
 # ---------------------------------------------------------------------------
 
+# rows (a, b, v): (a, b) is the composite PK, a may be NULL (Spark's
+# window groups NULL keys together, like the dict model's None key)
 rows_strategy = st.lists(
-    st.tuples(st.integers(0, 9), st.integers(0, 1000)), min_size=0, max_size=12
+    st.tuples(st.one_of(st.none(), st.integers(0, 4)), st.integers(0, 1),
+              st.integers(0, 1000)),
+    min_size=0, max_size=12,
 )
 
 
-@given(sink=rows_strategy, staging=rows_strategy)
-@settings(max_examples=8, deadline=None)
-def test_upsert_matches_dict_model(spark, sink, staging):
+@given(sink=rows_strategy, staging=rows_strategy,
+       partitions=st.sampled_from([None, 1, 4]))
+@example(sink=[(1, 0, 1), (2, 0, 2)], staging=[], partitions=4)  # empty batch
+@example(sink=[], staging=[(3, 1, 7)], partitions=4)  # single row
+@example(sink=[(1, 0, 1)], staging=[(1, 0, 5), (1, 0, 6), (None, 1, 9)],
+         partitions=4)  # duplicate staging keys + a NULL key
+@settings(max_examples=12, deadline=None)
+def test_upsert_matches_dict_model(spark, sink, staging, partitions):
+    """The M3 merge against a dict model, at the default AQE width and
+    at the ``partitions``-wide (jobs) width below the size gate."""
     from replicadb_spark.modes import upsert_dataframe
 
-    schema = "id int, v int"
-    sink_df = spark.createDataFrame(sink, schema) if sink else spark.createDataFrame([], schema)
-    stg_df = spark.createDataFrame(staging, schema) if staging else spark.createDataFrame([], schema)
-    got = {(r["id"], r["v"]) for r in upsert_dataframe(sink_df, stg_df, ["id"]).collect()}
+    schema = "a int, b int, v int"
+    sink_df = spark.createDataFrame(sink, schema)
+    stg_df = spark.createDataFrame(staging, schema)
+    out = upsert_dataframe(sink_df, stg_df, ["a", "b"], partitions=partitions)
+    got = [(r["a"], r["b"], r["v"]) for r in out.collect()]
 
     # model: staging beats sink per PK; duplicate PKs within a side
     # collapse to ONE winner (any of them — the window breaks ties
     # arbitrarily but deterministically)
-    model_keys = {i for i, _ in sink} | {i for i, _ in staging}
-    assert {i for i, _ in got} == model_keys
+    def key(row):
+        return row[:2]
+
+    model_keys = {key(r) for r in sink} | {key(r) for r in staging}
+    assert {key(r) for r in got} == model_keys
     assert len(got) == len(model_keys)  # exactly one row per PK
-    stg_keys = {i for i, _ in staging}
-    for i, v in got:
-        if i in stg_keys:
-            assert (i, v) in set(staging)  # staging won
-        else:
-            assert (i, v) in set(sink)
+    stg_keys = {key(r) for r in staging}
+    for r in got:
+        assert r in set(staging if key(r) in stg_keys else sink)
 
 
 # ---------------------------------------------------------------------------

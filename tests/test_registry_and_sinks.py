@@ -136,6 +136,72 @@ def test_run_reports_row_count(spark, tmp_path):
     assert res.rows == 123
 
 
+def _run_with_timeout(fn, seconds=120):
+    """``fn()`` in a worker thread: returns its result or re-raises its
+    error; fails instead of hanging when it has not returned in time
+    (``Observation.get`` blocks until an action fills it)."""
+    import threading
+
+    out = {}
+
+    def target():
+        try:
+            out["value"] = fn()
+        except BaseException as e:  # noqa: BLE001 - re-raised below
+            out["error"] = e
+
+    t = threading.Thread(target=target, daemon=True)
+    t.start()
+    t.join(seconds)
+    assert not t.is_alive(), f"no result in {seconds} s"
+    if "error" in out:
+        raise out["error"]
+    return out["value"]
+
+
+def test_run_reports_zero_rows_for_empty_source(spark, tmp_path):
+    """A source filtered to nothing still runs the sink's write action
+    over the observed plan, so the count is 0 — not a -1 sentinel and
+    not a hang."""
+    from replicadb_spark.engine import run
+    from replicadb_spark.options import ReplicaJob
+
+    src = str(tmp_path / "empty_src")
+    spark.range(10).write.parquet(src)
+    for mode in ("complete", "incremental"):
+        job = ReplicaJob(
+            source_connect=f"file://{src}", source_file_format="parquet",
+            source_where="1 = 0", mode=mode,
+            sink_connect=f"file://{tmp_path}/empty_out", sink_file_format="parquet",
+            sink_params={"pk.columns": "id"},
+        )
+        assert _run_with_timeout(lambda: run(spark, job)).rows == 0
+
+
+def test_run_raises_when_observation_is_lost(spark, tmp_path, monkeypatch):
+    """A sink path whose action drops the observed plan (here: writes
+    ``df.limit(0)``, which the optimizer folds to an empty relation)
+    leaves the observation without metrics. That is a bug in the sink
+    path and must raise, not turn into a row count."""
+    from replicadb_spark import engine
+    from replicadb_spark.options import ReplicaJob
+
+    src = str(tmp_path / "lost_src")
+    spark.range(10).write.parquet(src)
+    out = str(tmp_path / "lost_out")
+    monkeypatch.setattr(
+        engine, "write_sink",
+        lambda spark_, job_, df: df.limit(0).write.parquet(out),
+    )
+    job = ReplicaJob(
+        source_connect=f"file://{src}", source_file_format="parquet",
+        sink_connect=f"file://{out}", sink_file_format="parquet",
+        mode="complete",
+    )
+    with pytest.raises(Exception):
+        _run_with_timeout(lambda: engine.run(spark, job))
+
+
 def test_classify_derby_and_dialect():
     from replicadb_spark.registry import classify
     from replicadb_spark.sql.dialects import dialect_from_url, merge_sql, MergeSpec

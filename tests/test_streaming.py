@@ -1,5 +1,8 @@
 """Structured Streaming twins, driven bounded via availableNow."""
 
+import os
+import shutil
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -130,6 +133,8 @@ def test_stream_incremental_upsert(spark, event_dir, tmp_path):
     got_ts = {(r["user_id"], r["event_type"]): r["ts"] for r in got.collect()}
     for r in latest.collect():
         assert got_ts[(r["user_id"], r["event_type"])] == r["ts"]
+    # the per-batch swap leaves no temp or set-aside sibling behind
+    assert sorted(os.listdir(tmp_path)) == ["ck2", "snap"]
 
 
 def test_stream_dedup_first_seen_accumulates_across_batches(spark, tmp_path):
@@ -845,6 +850,7 @@ def test_stream_cdc_apply_equals_batch_apply(spark, tmp_path):
         for r in apply_changelog(empty, full_log, ["id"]).collect()
     }
     assert streamed == batch == {(1, "a2"), (2, "b2"), (4, "d2")}
+    assert sorted(os.listdir(tmp_path)) == ["cdc_ckpt", "cdc_snap", "cdc_src"]
 
 
 def test_stream_cusum_equals_batch_fold(spark, tmp_path):
@@ -3278,3 +3284,74 @@ def test_gc_races_cas_overwrite_refold(spark, tmp_path, monkeypatch):
     # ...and an expired id raises by name
     with pytest.raises(Exception, match="2"):
         snapshot_read(spark, store, snapshot_id=2).collect()
+
+
+def _cdc_micro_batch(spark, tmp_path, snap, name, rows):
+    """Run ``stream_cdc_apply`` over one new changelog file ``name``
+    (seeded snapshot, shared checkpoint); returns the query."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = tmp_path / "cdc_in"
+    src.mkdir(exist_ok=True)
+    pq.write_table(pa.table({
+        "seq": pa.array([r[0] for r in rows], pa.int64()),
+        "op": pa.array([r[1] for r in rows]),
+        "id": pa.array([r[2] for r in rows], pa.int64()),
+        "val": pa.array([r[3] for r in rows]),
+    }), src / name)
+    schema = spark.read.parquet(str(src)).schema
+    stream = P.read_event_stream(spark, str(src), schema, max_files_per_trigger=1)
+    q = P.stream_cdc_apply(
+        stream, snap, str(tmp_path / "cdc_ckpt"), keys=["id"], seed_snapshot=True,
+    )
+    assert q.awaitTermination(120)
+    assert q.exception() is None
+    return q
+
+
+@pytest.mark.parametrize("point,prior", [
+    ("written", {(1, "a"), (2, "b")}),
+    ("aside", {(1, "a"), (2, "b"), (3, "c")}),
+    ("aside_torn", {(1, "a"), (2, "b")}),
+    ("swapped", {(1, "a"), (2, "b"), (3, "c")}),
+])
+def test_stream_cdc_apply_recovers_each_crash_point(spark, tmp_path, point, prior):
+    """A micro-batch after a crash mid-swap merges over the full prior
+    snapshot (rolled forward from a committed tmp, else back from
+    .old) instead of a missing path, and leaves no sibling behind."""
+    snap = str(tmp_path / "snap")
+    tmp, old = snap + ".__replicadb_tmp__", snap + ".__replicadb_old__"
+    spark.createDataFrame([(1, "a"), (2, "b")], "id long, val string").write.parquet(snap)
+    spark.createDataFrame(
+        [(1, "a"), (2, "b"), (3, "c")], "id long, val string"
+    ).write.parquet(tmp)
+    if point != "written":
+        shutil.move(snap, old)
+    if point == "aside_torn":
+        os.remove(os.path.join(tmp, "_SUCCESS"))
+    elif point == "swapped":
+        shutil.move(tmp, snap)
+    _cdc_micro_batch(
+        spark, tmp_path, snap, "log0.parquet",
+        [(10, "update", 2, "B"), (11, "insert", 4, "d"), (12, "delete", 1, None)],
+    )
+    got = {(r["id"], r["val"]) for r in spark.read.parquet(snap).collect()}
+    assert got == (prior - {(1, "a"), (2, "b")}) | {(2, "B"), (4, "d")}
+    assert sorted(os.listdir(tmp_path)) == ["cdc_ckpt", "cdc_in", "snap"]
+
+
+def test_stream_cdc_apply_job_count(spark, tmp_path):
+    """Pin the Spark jobs of one ``stream_cdc_apply`` micro-batch on
+    tiny data. The merge is computed inside the snapshot write; a
+    checkpoint-then-write pass would add jobs and fail here."""
+    snap = str(tmp_path / "snap")
+    spark.createDataFrame([(1, "a"), (2, "b")], "id long, val string").write.parquet(snap)
+    q = _cdc_micro_batch(
+        spark, tmp_path, snap, "log0.parquet",
+        [(10, "update", 2, "B"), (11, "insert", 3, "c")],
+    )
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) == 5
+    got = {(r["id"], r["val"]) for r in spark.read.parquet(snap).collect()}
+    assert got == {(1, "a"), (2, "B"), (3, "c")}
